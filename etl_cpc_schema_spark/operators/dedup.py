@@ -495,7 +495,8 @@ def _write_index_tables(
     caller-computed frames — the probe-then-append serving loop hands
     in the keeper-filtered frames of :func:`incremental_dedup_probe`,
     whose shared shingle table its barrier write already materialized,
-    so the append re-signs nothing.  The caller guarantees the frames
+    so the append reuses the tokenize + minhash work (the fingerprint
+    pass over the raw text still runs).  The caller guarantees the frames
     evaluate the ``_index_frames`` expressions over exactly the rows
     being appended; because their shared upstream is materialized the
     three writes need no serial grouping."""
@@ -654,7 +655,8 @@ def append_to_dedup_index(
     collect (geometry is frozen for an index's lifetime); ``frames``
     hands in the probe's already-computed index frames for exactly
     the rows of ``new_docs`` (see :func:`incremental_dedup_probe`),
-    so the append re-signs nothing.
+    so the append reuses their tokenize + minhash work; the
+    fingerprint pass over the raw text still runs.
     """
     from . import index_store as IS
 
@@ -850,8 +852,9 @@ def incremental_dedup_probe(
     decide-before-mutate barrier write) can instead semi-join these
     frames down to the keepers and hand them to
     ``append_to_dedup_index(frames=...)`` — the barrier action
-    materialized the shared shingle checkpoint, so the keeper writes
-    are filters over cached blocks, not a second signing pass.  The
+    materialized the shared shingle checkpoint, so the keeper band
+    and shingle writes are filters over cached blocks, not a second
+    signing pass (the fingerprint frame still reads the raw text).  The
     frames evaluate the SAME expressions ``_index_frames`` builds
     (test-pinned), so the appended rows are bit-identical to the
     re-signing path.

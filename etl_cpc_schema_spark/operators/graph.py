@@ -28,6 +28,16 @@ basket (a crawler session, a bulk order) is the quadratic hot spot —
 `max_group_size` drops groups past the cap, the same documented
 bounded-recall trade as `max_doc_freq` in the n-gram dedup path.
 
+Every operator materializes the frames it reads more than once (its
+loop invariants) through ``iterutils.iter_checkpoint``, one set per
+call.  A checkpoint's blocks belong to its RDD, not to the
+CacheManager: the caller may derive from the result and drop the
+operator's handle before acting (the invariants stay reachable
+through the derived plan), and once the caller drops every frame
+built on them the JVM collects the RDD and Spark's ContextCleaner
+removes the blocks.  So storage stays bounded per call with no
+release bookkeeping here.
+
 No analog in the reference (its only graph-shaped work is the parent
 hierarchy walk, reference validator.py:161-174); this opens the graph
 family next to connected components (operators/components.py).
@@ -35,123 +45,12 @@ family next to connected components (operators/components.py).
 
 from __future__ import annotations
 
-import threading
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .iterutils import release
-
-#: Bounded registry of live loop-invariant frame sets.  ``df.persist``
-#: registers in the CacheManager and is never released by GC, so
-#: without cleanup every call leaks block-manager entries for the
-#: session lifetime (round-10 ADVICE).  The two "tie cleanup to the
-#: result" designs both failed measurably: eagerly checkpointing the
-#: result before release cost text_textrank +70% (it materializes a
-#: corpus-token-scale ranks table and breaks pipelining), and a
-#: weakref finalizer on the returned frame fires TOO EARLY — callers
-#: derive (``.orderBy`` etc.) and drop the operator's handle before
-#: acting, killing the cache before the one action that needs it
-#: (q82 re-derived its edge table ~3x per run, 10.5 vs 6.4 s at
-#: sf0.1).  So: invariants stay persisted until EVICTED — each call
-#: appends its set, sets beyond the last ``_RETAIN_SETS`` release
-#: oldest-first.  Reuse works during the caller's action (the newest
-#: set is always live) and across a serving loop's repeated identical
-#: calls (plan-cache hits within the window), while a long-lived
-#: session holds at most ``_RETAIN_SETS`` sets instead of one per
-#: call.  Unpersist on eviction is always safe: lineage stays
-#: replayable; a straggler action just recomputes.
-#:
-#: Round 13: sets are DEDUPED by canonical plan (LRU refresh).  A
-#: serving loop repeating one identical call registers N sets whose
-#: persisted frames all resolve to ONE CacheManager entry (the cache
-#: is keyed by canonicalized plan); once the window filled, every
-#: eviction unpersisted the very entry the newest call had just
-#: re-warmed, so from call _RETAIN_SETS+1 onward EVERY call paid the
-#: cold recompute — and a spread-adaptive bench that reacts to the
-#: resulting warm/cold bimodality with extra runs drove itself deeper
-#: into the thrash (graded q82 medians climbed 6.4 → 9.0 → 13.2 over
-#: rounds 10-12 on this mechanism).  With the semantic-hash LRU,
-#: an identical repeat refreshes its existing set instead of
-#: appending, the shared entry is never self-evicted, and the window
-#: bounds DISTINCT plans only.
-_RETAIN_SETS = 4
-#: entries are ``(key, invariants)`` where ``key`` is the tuple of the
-#: frames' canonical-plan hashes
-_live_invariants: list = []
-
-#: registry mutations are lock-guarded (round-11 ADVICE #4): in the
-#: multi-threaded serving loop the registry exists for, concurrent
-#: _finish/release_retained calls raced append/pop and could over- or
-#: under-release — correctness survives (lineage recomputes) but the
-#: _RETAIN_SETS memory bound does not.  The unpersist calls themselves
-#: run OUTSIDE the lock: they are JVM round-trips and holding a Python
-#: lock across them would serialize every caller on storage cleanup.
-_registry_mu = threading.Lock()
-
-
-def release_retained() -> None:
-    """Release every retained invariant set now (deterministic
-    cleanup for tests and session teardown)."""
-    with _registry_mu:
-        doomed = list(_live_invariants)
-        _live_invariants.clear()
-    for _key, invariants in doomed:
-        for df in invariants:
-            release(df)
-
-
-def _semantic_key(df: DataFrame):
-    """Canonical-plan hash for registry dedup — two frames with the
-    same hash resolve to the same CacheManager entry, so registering
-    both as separate sets would make eviction of one drop the other's
-    cache.  Falls back to object identity (no dedup, the pre-r13
-    behavior) if the API is unavailable."""
-    try:
-        return df.semanticHash()
-    except Exception:  # pragma: no cover - API drift
-        return id(df)
-
-
-def _same_set(stored: tuple, new: tuple) -> bool:
-    """Exact plan equality for a hash-matched registry entry.  The
-    32-bit-per-frame hash tuple narrows to one candidate; this
-    confirms with ``sameSemantics`` so a hash collision between
-    DISTINCT plan-sets cannot silently merge them (which would leave
-    the new set's persisted frames unregistered — the exact unbounded
-    leak the registry exists to bound).  Unconfirmable → treated as
-    distinct: appending a duplicate set is bounded by the window,
-    while wrongly merging leaks."""
-    if len(stored) != len(new):
-        return False
-    try:
-        return all(a.sameSemantics(b) for a, b in zip(stored, new))
-    except Exception:  # pragma: no cover - API drift
-        return False
-
-
-def _finish(result: DataFrame, *invariants: DataFrame) -> DataFrame:
-    if invariants:
-        key = tuple(_semantic_key(df) for df in invariants)
-        doomed = []
-        with _registry_mu:
-            for i, (k, _s) in enumerate(_live_invariants):
-                if k == key and _same_set(_s, invariants):
-                    # identical repeat: LRU-refresh the existing set —
-                    # the new call's persist() was a CacheManager no-op
-                    # on the same entry, so the old handles stay the
-                    # registry's (and the only) reference
-                    _live_invariants.append(_live_invariants.pop(i))
-                    break
-            else:
-                _live_invariants.append((key, tuple(invariants)))
-                while len(_live_invariants) > _RETAIN_SETS:
-                    doomed.append(_live_invariants.pop(0))
-        for _key, evicted in doomed:
-            for df in evicted:
-                release(df)
-    return result
+from .iterutils import iter_checkpoint
 
 __all__ = [
     "cooccurrence_edges",
@@ -237,36 +136,20 @@ def pagerank(
     ``base`` from iteration 1 on — so those nodes ride a
     loop-invariant union leg computed once, and each iteration is
     join + agg + union (narrow).  ``iterations`` is a fixed small
-    constant: lineage stays shallow, no checkpoint needed (contrast
+    constant: lineage stays shallow, no per-round checkpoint (contrast
     the until-convergence loop in operators/components.py, which
     checkpoints per round via iterutils)."""
-    from pyspark.storagelevel import StorageLevel
-
     gc = list(group_cols)
-    # e feeds every iteration's contribution join and nodes feeds
-    # every iteration's rank rebuild (plus the node derivation) — an
-    # unmaterialized plan re-expands the caller's edge derivation
-    # once PER REFERENCE (for text_textrank that is the tokenize +
-    # adjacent-pair explode over the whole corpus, re-run 14 times —
-    # the same .explain finding that cost q82 30 parquet scans).
-    # PERSIST, not localCheckpoint, for the triangle_counts reason:
-    # fixed-iteration loops need reuse, not lineage severing, and the
-    # columnar cache spills/recomputes cleanly on eviction.
-    e = (
-        edges.select(*gc, "u", "v")
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    # e feeds every iteration's contribution join (and the node
+    # derivation) — an unmaterialized plan re-expands the caller's
+    # edge derivation once PER REFERENCE (for text_textrank that is
+    # the tokenize + adjacent-pair explode over the whole corpus,
+    # re-run 14 times — the same .explain finding that cost q82 30
+    # parquet scans).  Checkpointed per call (module docstring): the
+    # blocks live while the caller holds a frame built on them.
+    e = iter_checkpoint(
+        edges.select(*gc, "u", "v").filter(F.col("u") != F.col("v")).distinct()
     )
-    # e ⋈ outdeg is LOOP-INVARIANT (round 13, guide §1.2 "remove
-    # unnecessary passes"): the arc list and its out-degrees never
-    # change across iterations, so joining them inside the loop paid
-    # one extra join (and its exchange) per iteration.  Hoist and
-    # persist the joined frame once; each iteration then joins ONLY
-    # the ranks that actually changed.
-    e_od = e.join(
-        e.groupBy(*gc, "u").agg(F.count("*").alias("_od")), [*gc, "u"]
-    ).persist(StorageLevel.MEMORY_AND_DISK)
     base = unit * (1000 - damping_milli) // 1000
     if iterations == 0:
         # degenerate call: every node at its initial mass — the only
@@ -276,15 +159,22 @@ def pagerank(
             .union(e.select(*gc, F.col("v").alias("node")))
             .distinct()
         )
-        return _finish(
-            nodes.withColumn("rank", F.lit(unit).cast("bigint")), e, e_od
-        )
+        return nodes.withColumn("rank", F.lit(unit).cast("bigint"))
+    # e ⋈ outdeg is LOOP-INVARIANT (round 13, guide §1.2 "remove
+    # unnecessary passes"): the arc list and its out-degrees never
+    # change across iterations, so joining them inside the loop paid
+    # one extra join (and its exchange) per iteration.  Hoist and
+    # materialize the joined frame once; each iteration then joins
+    # ONLY the ranks that actually changed.
+    e_od = iter_checkpoint(
+        e.join(e.groupBy(*gc, "u").agg(F.count("*").alias("_od")), [*gc, "u"])
+    )
     # zero-IN-degree nodes receive no contribution in ANY iteration,
     # so from iteration 1 on their rank is the constant ``base`` —
     # the loop-invariant union leg that replaces the per-iteration
     # node-table left join (round 14).  src \ dst = exactly the
     # non-isolated nodes with no incoming arc.
-    m_base = (
+    m_base = iter_checkpoint(
         e.select(*gc, F.col("u").alias("node"))
         .distinct()
         .join(
@@ -293,7 +183,6 @@ def pagerank(
             "left_anti",
         )
         .withColumn("rank", F.lit(base).cast("bigint"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     ranks = None
     for it in range(iterations):
@@ -335,10 +224,7 @@ def pagerank(
                 F.lit(base) + F.expr(f"({damping_milli} * _c) div 1000")
             ).cast("bigint").alias("rank"),
         ).unionByName(m_base)
-    # e/e_od/m_base release when the caller drops the result (round-10
-    # ADVICE: without it every call leaks block-manager entries for
-    # the session lifetime) — see _finish for why not any earlier
-    return _finish(ranks, m_base, e, e_od)
+    return ranks
 
 
 def label_propagation(
@@ -365,8 +251,6 @@ def label_propagation(
     so a celebrity vertex costs a bounded two-phase hash aggregate
     (partials per task) instead of a single-task sort over its
     neighbor list.  All shuffles key on the node id."""
-    from pyspark.storagelevel import StorageLevel
-
     e = (
         edges.select(
             F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
@@ -374,18 +258,18 @@ def label_propagation(
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
-    # every round joins arcs against the previous labels — persist so
-    # the caller's edge derivation expands once, not once per round
+    # every round joins arcs against the previous labels — checkpoint
+    # so the caller's edge derivation expands once, not once per round
     # (the pagerank/triangle_counts materialization rule).  Both
     # directions come from ONE explode rather than a self-union
     # (round 13, guide §1.2): the union's two legs each expand the
     # caller's edge derivation — for q83's basket self-join the
     # per-job profile showed the full C(g,2) derivation running TWICE
     # (two 64-task stages, ~14 s executor time each) because the two
-    # leg stages launch concurrently before the persist is populated.
+    # leg stages launch concurrently before a lazy cache is populated.
     # One explode = one derivation pass; rows are identical (u≠v and
     # e is distinct, so the two directions are disjoint).
-    arcs = (
+    arcs = iter_checkpoint(
         e.select(
             F.explode(
                 F.array(
@@ -397,7 +281,6 @@ def label_propagation(
             ).alias("_arc")
         )
         .select(F.col("_arc.u").alias("u"), F.col("_arc.v").alias("v"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     nodes = arcs.select(F.col("u").alias("node")).distinct()
     labels = nodes.withColumn("community", F.col("node"))
@@ -427,9 +310,7 @@ def label_propagation(
                 )["_n"]
             ).alias("community")
         )
-    # arcs release when the caller drops the result — the shared
-    # storage-hygiene epilogue (round-10 ADVICE)
-    return _finish(labels, arcs)
+    return labels
 
 
 def triangle_counts(edges: DataFrame) -> DataFrame:
@@ -442,26 +323,23 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     Each triangle contributes exactly +1 to each of its three
     corners: it is enumerated once, at its lowest-(degree, id)
     corner, by the compact-forward orientation (module docstring)."""
-    from pyspark.storagelevel import StorageLevel
-
     # e is referenced three times (both degree legs + the ranking
     # join) and arcs three more (both wedge legs + the closing arc);
     # without materialization every reference re-expanded the whole
     # upstream edge derivation — for the co-order graph that is the
     # C(g,2) basket self-join, re-run up to nine times (the round-9
-    # .explain audit showed 30 parquet scans).  PERSIST, not
-    # localCheckpoint (round 10): this operator is not iterative, so
-    # it needs REUSE, not lineage severing — and the columnar
-    # compressed cache spills cleanly and recomputes on eviction,
-    # where the round-9 localCheckpoint's deserialized row blocks
-    # OOM'd a default-heap local[8] session at sf0.1 (the
-    # driver-shaped contract session q82 must survive).  Same 16-GiB
-    # bench profile either way; the win over no-materialization is
-    # unchanged.
-    e = edges.select(
-        F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
-    ).filter(F.col("u") != F.col("v")).distinct().persist(
-        StorageLevel.MEMORY_AND_DISK
+    # .explain audit showed 30 parquet scans).  Checkpointed, not
+    # persisted: a CacheManager entry outlives the call until someone
+    # unpersists it, while checkpoint blocks are reclaimed with the
+    # caller's result (module docstring).  The row blocks are larger
+    # than the columnar cache's: at sf0.1 they OOM'd a local[8]
+    # session on Spark's 1 GB default driver heap (round 9), and fit
+    # the 4 GB heap the contract session (tools/drive_contract.py)
+    # runs with.
+    e = iter_checkpoint(
+        edges.select(
+            F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
+        ).filter(F.col("u") != F.col("v")).distinct()
     )
     deg = (
         e.select(F.col("u").alias("n"))
@@ -485,11 +363,13 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     fwd = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
     )
-    arcs = ranked.select(
-        F.when(fwd, F.col("u")).otherwise(F.col("v")).alias("a"),
-        F.when(fwd, F.col("v")).otherwise(F.col("u")).alias("b"),
-        F.when(fwd, F.col("dv")).otherwise(F.col("du")).alias("db"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    arcs = iter_checkpoint(
+        ranked.select(
+            F.when(fwd, F.col("u")).otherwise(F.col("v")).alias("a"),
+            F.when(fwd, F.col("v")).otherwise(F.col("u")).alias("b"),
+            F.when(fwd, F.col("dv")).otherwise(F.col("du")).alias("db"),
+        )
+    )
     # wedges at the source: two arcs out of a, far ends ordered by
     # (degree, id) to match the closing arc's own orientation
     e1 = arcs.select("a", F.col("b").alias("x"), F.col("db").alias("dx"))
@@ -508,8 +388,4 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
         .groupBy("node")
         .agg(F.count("*").cast("bigint").alias("triangles"))
     )
-    # e/arcs release when the caller drops the result — same
-    # storage-hygiene rule as pagerank/label_propagation (round-10
-    # ADVICE): a long-lived bench/serving session must not accumulate
-    # per-call persisted blocks and rely on LRU eviction
-    return _finish(counts, arcs, e)
+    return counts

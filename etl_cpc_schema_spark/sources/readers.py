@@ -118,23 +118,6 @@ def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _with_micro_ts(spark.read.schema(schema).parquet(path), needs_div)
 
 
-def read_text_lines(spark: SparkSession, path: str, glob: str | None = None) -> DataFrame:
-    """S5 — line records with their source file name.
-
-    ``pathGlobFilter`` reproduces the reference's member-name filter
-    (``cpc-section-*``, parser.py:81) as partition/path pruning.
-    """
-    reader = spark.read
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    df = reader.text(path)
-    return df.select(
-        F.element_at(F.split(F.input_file_name(), "/"), -1).alias("file_name"),
-        F.input_file_name().alias("source_file"),
-        F.col("value").alias("line"),
-    )
-
-
 def read_zip_members(
     spark: SparkSession,
     zip_path: str,

@@ -852,15 +852,17 @@ def incremental_dedup_stream(
 
         with ThreadPoolExecutor(max_workers=1) as ex:
             fut = ex.submit(DD.save_dedup_index, corpus, index_path, n=3)
-            batch.filter(F.col("doc_id") % 10 == 0).repartition(1).write.mode(
-                "append"
-            ).parquet(stage)
-            pre = {f for f in os.listdir(stage) if f.endswith(".parquet")}
-            batch.filter(F.col("doc_id") % 10 == 5).repartition(1).write.mode(
-                "append"
-            ).parquet(stage)
-            _force_mtime_after(stage, pre)
-            fut.result()
+            # result() in finally: a failed save surfaces (chained) even
+            # when a staging write raises first
+            try:
+                b1 = batch.filter(F.col("doc_id") % 10 == 0)
+                b2 = batch.filter(F.col("doc_id") % 10 == 5)
+                b1.repartition(1).write.mode("append").parquet(stage)
+                pre = {f for f in os.listdir(stage) if f.endswith(".parquet")}
+                b2.repartition(1).write.mode("append").parquet(stage)
+                _force_mtime_after(stage, pre)
+            finally:
+                fut.result()
 
         sink = _incremental_dedup_sink(index_path, out_stage)
 
@@ -1061,15 +1063,18 @@ def ann_probe_stream(
                     dirs_exist_ok=True,
                 )
             )
-            b1 = batch.filter(
-                (F.col("vec_id") >= split1) & (F.col("vec_id") < split2)
-            )
-            b2 = batch.filter(F.col("vec_id") >= split2)
-            b1.repartition(1).write.mode("append").parquet(stage)
-            pre = {f for f in os.listdir(stage) if f.endswith(".parquet")}
-            b2.repartition(1).write.mode("append").parquet(stage)
-            _force_mtime_after(stage, pre)
-            fut.result()
+            # result() in finally, as in incremental_dedup_stream
+            try:
+                b1 = batch.filter(
+                    (F.col("vec_id") >= split1) & (F.col("vec_id") < split2)
+                )
+                b2 = batch.filter(F.col("vec_id") >= split2)
+                b1.repartition(1).write.mode("append").parquet(stage)
+                pre = {f for f in os.listdir(stage) if f.endswith(".parquet")}
+                b2.repartition(1).write.mode("append").parquet(stage)
+                _force_mtime_after(stage, pre)
+            finally:
+                fut.result()
 
         sink = _ann_probe_sink(index_path, out_stage)
 

@@ -273,163 +273,64 @@ def test_edges_then_triangles_composition(spark):
     assert {r.node: r.triangles for r in out.collect()} == {1: 1, 2: 1, 3: 1}
 
 
-def test_invariants_bounded_by_eviction_registry(spark):
-    """The persisted loop-invariant frames (edges/nodes/arcs) must not
-    accumulate per call for the session lifetime (round-10 ADVICE).
-    They stay cached across the caller's action — callers derive and
-    drop the operator's handle before collecting, so any
-    result-lifetime scheme releases too early — and are released
-    oldest-first once more than _RETAIN_SETS calls have run."""
+def test_invariants_reclaimed_after_caller_drops_result(spark):
+    """Each call checkpoints its own loop invariants; their blocks
+    must outlive the operator's handle (callers derive, drop the
+    handle, then act) and must not accumulate across calls: once the
+    caller drops its frames, GC plus Spark's ContextCleaner bring
+    block storage back to the baseline with no explicit release and
+    no ``clearCache``.  Identical repeated calls return identical
+    rows.  RDD ids grow monotonically, so the baseline is "no stored
+    RDD newer than this test's start" — immune to blocks that earlier
+    tests on the shared session leave for the cleaner."""
+    import gc
     import time
 
-    from etl_cpc_schema_spark.operators import graph as G
-
     sc = spark.sparkContext
+    mark = sc.emptyRDD().id()
 
     def n_cached():
-        return len(sc._jsc.sc().getRDDStorageInfo())
-
-    G.release_retained()
-    time.sleep(0.2)
-    base = n_cached()
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5)], "u bigint, v bigint"
-    )
-    # the caller pattern every registry query uses: derive from the
-    # operator result, DROP the handle, then act — the invariants must
-    # still be cached at action time
-    out = G.label_propagation(edges, iterations=2).orderBy("node")
-    assert len(out.collect()) == 5
-    assert n_cached() > base  # newest set live during/after the action
-
-    # IDENTICAL repeated calls dedupe to ONE live set (round 13): the
-    # persisted frames of every repeat resolve to the same
-    # CacheManager entry, so pre-dedup the window's eviction
-    # unpersisted the entry the newest call had just warmed and every
-    # post-window repeat paid the cold recompute (the graded-q82
-    # median climb).  The repeat must LRU-refresh, never thrash.
-    for _ in range(G._RETAIN_SETS + 3):
-        G.label_propagation(edges, iterations=2).orderBy("node").collect()
-    assert len(G._live_invariants) == 1, "identical repeats must dedupe"
-    assert n_cached() > base, "dedup must keep the shared entry cached"
-
-    # DISTINCT calls bound the registry: storage stays within the
-    # retention window, evicted oldest-first
-    for k in range(G._RETAIN_SETS + 3):
-        e_k = spark.createDataFrame(
-            [(1, 2), (2, 3), (3, 1), (3, 4), (4, 6 + k)],
-            "u bigint, v bigint",
+        return sum(
+            1 for info in sc._jsc.sc().getRDDStorageInfo() if info.id() > mark
         )
-        G.label_propagation(e_k, iterations=2).orderBy("node").collect()
-    for _ in range(50):  # unpersist is async — poll briefly
-        if n_cached() <= base + G._RETAIN_SETS:
-            break
-        time.sleep(0.1)
-    assert n_cached() <= base + G._RETAIN_SETS
-    assert len(G._live_invariants) == G._RETAIN_SETS
 
-    G.release_retained()
-    for _ in range(50):
-        if n_cached() <= base:
-            break
-        time.sleep(0.1)
-    assert n_cached() <= base and not G._live_invariants
+    def edges(k):
+        pairs = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 1), (4, 6 + k)]
+        return spark.createDataFrame(pairs, "u bigint, v bigint")
 
-
-def test_eviction_registry_threadsafe(spark):
-    """Concurrent _finish/release_retained calls (the multi-threaded
-    serving-loop scenario the registry exists for) must keep the
-    _RETAIN_SETS bound — the unsynchronized append/pop race could
-    over- or under-release (round-11 ADVICE #4)."""
-    import threading
-
-    from etl_cpc_schema_spark.operators import graph as G
-
-    G.release_retained()
-    errors: list[Exception] = []
-
-    def hammer(worker: int) -> None:
-        try:
-            for i in range(12):
-                df = spark.range(worker * 100 + i + 1).persist()
-                df.count()  # materialize so release has blocks to drop
-                G._finish(df.selectExpr("id + 1 as id"), df)
-                if i % 5 == 4:
-                    G.release_retained()
-        except Exception as e:  # pragma: no cover - failure detail
-            errors.append(e)
-
-    threads = [
-        threading.Thread(target=hammer, args=(w,)) for w in range(4)
-    ]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    assert not errors
-    assert len(G._live_invariants) <= G._RETAIN_SETS
-    G.release_retained()
-    assert not G._live_invariants
-
-
-def test_identical_repeats_never_evict_their_own_cache(spark):
-    """The q82 serving-loop shape: one identical triangle_counts call
-    repeated past the retention window.  Every repeat's persisted
-    edge/arc frames resolve to the same CacheManager entries, so the
-    pre-r13 registry evict-thrashed them (call N evicted the entry
-    call N-1 had just re-warmed — every post-window call paid the
-    cold recompute; graded q82 medians climbed three rounds on it).
-    Pin: the shared entries stay cached across 2x-window repeats and
-    the registry holds exactly one set."""
-    import time
-
-    from etl_cpc_schema_spark.operators import graph as G
-
-    sc = spark.sparkContext
-
-    def n_cached():
-        return len(sc._jsc.sc().getRDDStorageInfo())
-
-    G.release_retained()
-    # quiesce: async unpersists from EARLIER tests on the shared
-    # session can land mid-loop and sink the count below the baseline
-    # — wait for two stable consecutive samples before baselining
-    prev = n_cached()
-    for _ in range(50):
-        time.sleep(0.2)
-        cur = n_cached()
-        if cur == prev:
-            break
-        prev = cur
-    base = prev
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (4, 1)],
-        "u bigint, v bigint",
-    )
-    first = {
-        r.node: r.triangles
-        for r in triangle_counts(edges).orderBy("node").collect()
+    calls = {
+        "lpa": lambda e: label_propagation(e, iterations=2).orderBy("node"),
+        "tri": lambda e: triangle_counts(e).orderBy("node"),
+        "pr": lambda e: pagerank(e, iterations=3).orderBy("node"),
     }
-    after_first = n_cached()
-    assert after_first > base  # invariants live (edges + arcs)
-    for _ in range(2 * G._RETAIN_SETS):
-        got = {
-            r.node: r.triangles
-            for r in triangle_counts(edges).orderBy("node").collect()
-        }
-        assert got == first
-        # never MORE entries than one call's invariants: the repeats
-        # deduped (a growth here is the thrash/leak regression)
-        assert n_cached() <= after_first
-    assert len(G._live_invariants) == 1
-    # never FEWER either: the registry's shared entries must still be
-    # cached after 2x-window repeats — asserted directly against the
-    # CacheManager for OUR frames (immune to count drift from other
-    # tests' async cleanup)
-    cache_mgr = spark._jsparkSession.sharedState().cacheManager()
-    for df in G._live_invariants[0][1]:
-        assert cache_mgr.lookupCachedData(df._jdf).isDefined(), (
-            "registry invariant frame lost its cache entry — "
-            "self-eviction regressed"
-        )
-    G.release_retained()
+
+    # derive, drop the operator's handle, collect garbage, THEN act:
+    # the derived plan alone must keep the invariants readable
+    firsts = {name: call(edges(0)) for name, call in calls.items()}
+    gc.collect()
+    sc._jvm.System.gc()
+    # lpa: arcs; triangles: e, arcs; pagerank: e, e_od, m_base
+    assert n_cached() >= 6, "invariants must be materialized per call"
+    rows0 = {name: df.collect() for name, df in firsts.items()}
+    assert rows0["tri"] and rows0["lpa"] and rows0["pr"]
+
+    # identical repeats: identical rows
+    for name, call in calls.items():
+        assert call(edges(0)).collect() == rows0[name], name
+
+    # distinct calls in the same derive-drop-act pattern
+    for k in range(1, 5):
+        for call in calls.values():
+            assert call(edges(k)).collect()
+
+    del firsts
+    # Python GC detaches the py4j handles, JVM GC enqueues the
+    # unreachable RDDs, the ContextCleaner unpersists them
+    # asynchronously — poll
+    for _ in range(100):
+        gc.collect()
+        sc._jvm.System.gc()
+        time.sleep(0.2)
+        if n_cached() == 0:
+            break
+    assert n_cached() == 0, "invariant blocks leaked past the calls"

@@ -548,3 +548,34 @@ def test_batch_dirs_explicit_paths_and_loud_empty(spark, tmp_path):
     # FileNotFoundException from listStatus (round-11 ADVICE #3)
     with pytest.raises(ValueError, match="wrote nothing"):
         _batch_dirs(spark, str(tmp_path / "never_created"))
+
+
+def test_background_index_failure_not_swallowed(spark, sf_dir, monkeypatch):
+    """The streams overlap a background index save/copy with the
+    foreground staging writes.  When both fail, the background error
+    must still surface: it is raised (chained onto the foreground
+    one), not dropped by the executor's shutdown."""
+    from etl_cpc_schema_spark.operators import dedup as DD
+    from etl_cpc_schema_spark.streaming import ingest
+
+    class BackgroundFailure(RuntimeError):
+        pass
+
+    class ForegroundFailure(RuntimeError):
+        pass
+
+    def fail_background(*_a, **_k):
+        raise BackgroundFailure("index save failed")
+
+    def fail_foreground(*_a, **_k):
+        raise ForegroundFailure("staging failed")
+
+    monkeypatch.setattr(DD, "save_dedup_index", fail_background)
+    monkeypatch.setattr(ingest, "_pristine_ann_index", fail_background)
+    monkeypatch.setattr(ingest, "_force_mtime_after", fail_foreground)
+    with pytest.raises(BackgroundFailure) as exc:
+        ingest.incremental_dedup_stream(spark, sf_dir)
+    assert isinstance(exc.value.__context__, ForegroundFailure)
+    with pytest.raises(BackgroundFailure) as exc:
+        ingest.ann_probe_stream(spark, sf_dir)
+    assert isinstance(exc.value.__context__, ForegroundFailure)
